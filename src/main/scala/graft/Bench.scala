@@ -141,7 +141,6 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val ioFloor = sys.env.getOrElse("SPARK_GRAFT_IO_FLOOR", "150").toDouble
     val spark = SparkSession.builder()
-      .config(GraftSession.staticConf())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")

@@ -96,32 +96,11 @@ object GraftSession {
   val codegenCacheEntries: String =
     sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
 
-  /** STATIC confs every engine session applies at context-build time
-    * (runtime `tune()` cannot set these; the driver-contract mains call
-    * this on their own builders). Currently carries one OPT-IN:
-    * `SPARK_GRAFT_KRYO=1` swaps in Kryo + the GraphX class
-    * registrations (the documented GraphX+Kryo setup). NOT the default
-    * — round-18 measured rejection: alternating-JVM A/B at 100× read
-    * q24 20.90 s (Kryo) vs 20.51 s (Java) on the tight back-to-back
-    * pair — the GraphX connected-components cost there is Pregel
-    * iteration scheduling, not shuffle serialization bytes, and the
-    * SQL/Tungsten surface (the rest of the catalog) serializes
-    * UnsafeRows regardless of this conf. See OPTIMIZATION_r18.md. */
-  def staticConf(): org.apache.spark.SparkConf = {
-    val c = new org.apache.spark.SparkConf()
-    if (sys.env.get("SPARK_GRAFT_KRYO").contains("1")) {
-      c.set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      org.apache.spark.graphx.GraphXUtils.registerKryoClasses(c)
-    }
-    c
-  }
-
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val b = SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName("graft")
-      .config(staticConf())
       .config("spark.ui.enabled", "false")
       // native expressions as SQL functions (minhash_sig, simhash_sig,
       // array_dot, marker_counts)

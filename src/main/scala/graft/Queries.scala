@@ -1561,7 +1561,7 @@ object Queries {
 
   /** q61 — duplicate clustering under a VALUE oracle. q24 is rows-only
     * because its candidate pairs are hash-seeded, but the clustering
-    * step itself (`Dedup.clusterDuplicates`, GraphX connected
+    * step itself (`Dedup.clusterDuplicates`, connected
     * components) is deterministic — so feed it a deterministic edge
     * set: exact word-3-gram Jaccard ≥ 0.5 over the doc_id < 500 block
     * (q13's shingle semantics). The DuckDB oracle collapses the same

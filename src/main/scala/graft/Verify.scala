@@ -11,7 +11,6 @@ object Verify {
     if (args.headOption.contains("quality")) {
       val Array(_, sfDir, outFile) = args
       val spark = SparkSession.builder()
-      .config(GraftSession.staticConf())
         .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.extensions", "graft.GraftExtensions")
@@ -30,7 +29,6 @@ object Verify {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .config(GraftSession.staticConf())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -273,8 +273,8 @@ object UserPointsBatch {
   * SEMANTIC dedup (SemDeDup: embedding cells → within-cell cosine
   * prune) → optional benchmark decontamination → survivors. Returns
   * (survivors, per-stage counts). Every stage is a DataFrame plan;
-  * the only iterative pieces are the GraphX cluster collapse and the
-  * (tiny, bench-side) bloom build.
+  * the only iterative pieces are the connected-components cluster
+  * collapse and the (tiny, bench-side) bloom build.
   *
   * The semantic stage sits between near-dup and decontamination: it
   * removes the redundancy the LEXICAL stages can't see (paraphrases,

@@ -490,22 +490,11 @@ object Dedup {
     require(minDf >= 2, s"minDf < 2 would excise every position " +
       s"(df >= 1 always holds), got $minDf")
     val base = spanBase(df, textCol, idCol)
-    // A/B gate (round 18): `true` repartitions the gram frame on the
-    // fingerprint so the df-agg branch and the hot-positions join
-    // branch would share one materialized exchange instead of the join
-    // side recomputing the gram pass. MEASURED AND REJECTED as the
-    // default: column pruning projects the two branches differently,
-    // so their exchanges are not canonically equal and never dedup —
-    // the "shared" shape just pays a second corpus-sized exchange
-    // (1.36 GB at 100×) to save a kernel pass that the native
-    // gram_fingerprints kernel made cheap (76 core-s; interleaved
-    // 100× A/B: 17.91 s shared vs 17.70 s recompute — a tie). Kept as
-    // an opt-in so the adjudication stays executable.
-    val shared = df.sparkSession.conf
-      .get("spark.graft.excise.sharedExchange", "false").toBoolean
-    val grams0 = spanGrams(base, k)
-    val grams = if (shared) grams0.repartition(col("_f1"), col("_f2"))
-                else grams0
+    // the join side recomputes the gram pass rather than sharing an
+    // exchange with the df-agg branch: column pruning projects the two
+    // branches differently, so a shared repartition never dedups and
+    // only adds a corpus-sized exchange (OPTIMIZATION_r18.md §8)
+    val grams = spanGrams(base, k)
     val hot = grams.groupBy(col("_f1"), col("_f2"))
       .agg(countDistinct(col("id")).as("_df"))
       .filter(col("_df") >= minDf)
@@ -580,9 +569,7 @@ object Dedup {
     * edge sets within `smallEdgeLimit` collapse in a driver union-find
     * (bounded memory by construction — the probe collects at most
     * limit+1 rows), larger ones through the DataFrame-native
-    * alternating-star collapse ([[distributedMinLabel]]; round 18 —
-    * the GraphX Pregel predecessor stays available via
-    * `spark.graft.cluster.engine=graphx` for A/B adjudication).
+    * alternating-star collapse ([[distributedMinLabel]], round 18).
     * Returns (id, keep_id) for every id that appears in some pair.
     *
     * CONTRACT: ids must be (castable to) distinct longs. String corpus
@@ -593,8 +580,7 @@ object Dedup {
     * CALLER-MUST-UNPERSIST (round-15 advisor): the distributed path
     * returns its (id, keep_id) result PERSISTED (MEMORY_AND_DISK) —
     * that pin is what lets the operator release its iteration caches
-    * (and, on the GraphX variant, the ~2 GB graph RDDs — the r14
-    * q30-OOM fix) eagerly instead of leaking them, but it means each
+    * eagerly instead of leaking them, but it means each
     * invocation leaves one small cached frame behind. Long-lived
     * sessions must `result.unpersist()` after their downstream
     * consumption materializes (Bench sweeps persistent RDDs between
@@ -605,7 +591,7 @@ object Dedup {
     * `f` consumes the clusters frame and MUST MATERIALIZE that
     * consumption before returning (collect, count, localCheckpoint —
     * anything that executes; a lazily-escaping frame would recompute
-    * the clustering, correct but expensive on the GraphX path). The
+    * the clustering, correct but expensive on the distributed path). The
     * persisted frame is released when `f` returns, so long-lived
     * sessions stop accumulating one cached frame per invocation. */
   def clusterDuplicatesScoped[T](pairs: DataFrame,
@@ -624,8 +610,8 @@ object Dedup {
     // Persisted so the pair pipeline (minhash/jaccard candidate
     // generation — the expensive part) computes ONCE: the bounded probe
     // below reads it, and when the probe overflows, the distributed
-    // path reads it again — previously the GraphX branch recomputed
-    // the whole candidate pipeline a second time. Released before
+    // path reads it again instead of recomputing the whole candidate
+    // pipeline a second time. Released before
     // return on every path (the RESULT keeps the caller-must-unpersist
     // contract; this cache is internal).
     val ids = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
@@ -659,37 +645,7 @@ object Dedup {
         }
         val out = parent.keysIterator.map(id => (id, find(id))).toSeq
         spark.createDataFrame(out).toDF("id", "keep_id")
-      } else if (spark.conf
-          .get("spark.graft.cluster.engine", "dataframe") == "graphx") {
-        // Retained for A/B adjudication only (see OPTIMIZATION_r18.md):
-        // GraphX Pregel connected components, the pre-round-18 large
-        // path. Its 100×-scale cost is iteration *scheduling* (tens of
-        // tiny RDD jobs) plus the Java-serialized VertexRDD/EdgeRDD
-        // shuffles the measured-and-rejected Kryo opt-in targeted.
-        import org.apache.spark.graphx.{Edge, Graph}
-        val edges = ids.rdd.map(r => Edge(r.getLong(0), r.getLong(1), ()))
-        val graph = Graph.fromEdges[Unit, Unit](edges, ())
-        val ccGraph = graph.connectedComponents()
-        // MATERIALIZE the small (id, keep_id) result, then RELEASE the
-        // graph: GraphX caches the input graph and the Pregel result as
-        // MEMORY_ONLY RDDs that a lazy return would pin until a
-        // GC-driven cleaner pass — ~2 GB live heap after a 100×-scale
-        // q24, the structure behind round-14's "q30 OOMs an 8 GiB heap"
-        // (the blocks sat in the PROTECTED storage region while the
-        // next big query's execution peak asked for the same memory).
-        // The persisted result is two longs per paired id — orders of
-        // magnitude smaller, and spillable.
-        val out = spark.createDataFrame(
-            ccGraph.vertices.map { case (id, rep) => (id, rep) })
-          .toDF("id", "keep_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        ccGraph.unpersist(blocking = false)
-        graph.unpersist(blocking = false)
-        out
-      } else {
-        distributedMinLabel(ids, spark)
-      }
+      } else distributedMinLabel(ids, spark)
     } finally { ids.unpersist(blocking = false); () }
   }
 

@@ -704,17 +704,11 @@ object Sinks {
     require(!df.columns.exists(_.equalsIgnoreCase("shard")),
       "writeShards derives its own `shard` column; rename the input's")
     val spark = df.sparkSession
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // single-writer contract, ENFORCED: the lease must be held before
-    // the recovery sweep — two interleaved publishes would sweep each
-    // other's staging as crash debris (see [[acquirePublishLease]])
-    val lease = acquirePublishLease(fs, base)
-    try {
+    withPublishLease(spark, path) { (base, fs) =>
       writeShardsLeased(df, path, idCol, nShards, spark, base, fs,
         retainPrevious, zoneCols, shardCol, sortCols, bloomCols, bloomFpp,
         sketchCols, quantileCols)
-    } finally releasePublishLease(fs, base, lease)
+    }
   }
 
   /** One-column `shard` schema for validation reads — parquet serves
@@ -723,38 +717,27 @@ object Sinks {
     org.apache.spark.sql.types.StructField("shard",
       org.apache.spark.sql.types.LongType)))
 
-  /** Total row count of a staged parquet directory from the part-file
-    * FOOTERS, on the driver — the same number `df.count()` returns for
-    * a metadata-only parquet count, without paying a Spark job and its
-    * scheduling round trip (round 17; the dirs here are
-    * publish-staging trees of ≤ nShards × a few files). */
-  private def footerRowCount(fs: org.apache.hadoop.fs.FileSystem,
-                             dir: org.apache.hadoop.fs.Path,
+  /** Total row count of parquet `files` (a staged read's
+    * `inputFiles`) from their FOOTERS, on the driver — the same number
+    * `df.count()` returns for a metadata-only parquet count, without
+    * paying a Spark job and its scheduling round trip (round 17; the
+    * files here are publish-staging trees of ≤ nShards × a few). The
+    * read's file index already hides `_`/`.`-prefixed files, exactly
+    * as the reader the count stands in for does. */
+  private def footerRowCount(files: Array[String],
                              conf: org.apache.hadoop.conf.Configuration): Long = {
-    val files = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.Path]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      // match Spark's path filter: hidden (`_`/`.`-prefixed) files are
-      // invisible to the reader the count stands in for, so counting
-      // them would over-size the blooms (round-17 advisor)
-      if (st.isFile && name.endsWith(".parquet") &&
-          !name.startsWith("_") && !name.startsWith("."))
-        files += st.getPath
-    }
-    def count(p: org.apache.hadoop.fs.Path): Long = {
+    def count(f: String): Long = {
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf))
       try rd.getRecordCount finally rd.close()
     }
     // footer opens are independent metadata reads — do them on the
     // common pool so a many-file staging is not a serial driver stall
     // (the job this replaced was at least parallel across tasks)
     if (files.length < 8) files.iterator.map(count).sum
-    else java.util.Arrays.stream(files.toArray).parallel()
-      .mapToLong(p => count(p)).sum()
+    else java.util.Arrays.stream(files).parallel()
+      .mapToLong(f => count(f)).sum()
   }
 
   /** Shard id column: hash of the row id by default (stable across
@@ -777,99 +760,133 @@ object Sinks {
                                 bloomFpp: Double = 0.01,
                                 sketchCols: Seq[String] = Nil,
                                 quantileCols: Seq[String] = Nil): DataFrame = {
-    // finish whatever a killed predecessor left behind BEFORE touching
-    // the layout (the lease guarantees the debris is ours to sweep)
-    recoverPublish(fs, base)
     val dataCols = df.columns.toSeq
-    val stamp = genStamp()
-    val staging = new org.apache.hadoop.fs.Path(base, s"_staging_$stamp")
-    val old = new org.apache.hadoop.fs.Path(base, s"_old_$stamp")
-    val stagedData = new org.apache.hadoop.fs.Path(staging, "data")
-    // STAGE, don't overwrite: every expensive write lands beside the
-    // live generation, so a crash or failing Spark task anywhere up to
-    // the commit marker leaves the previous publish untouched and
-    // fully verifiable (the pre-round-8 form overwrote $path/data in
-    // place — a mid-write kill had already destroyed the old corpus).
     val sharded = df.withColumn("shard",
       shardAssignment(idCol, nShards, shardCol))
-    // an in-process staging failure (failed task, bad input) deletes
-    // its own debris; a process KILL can't, so recoverPublish sweeps
-    // marker-less staging dirs at the next call either way
+    publishGeneration(spark, path, base, fs,
+      Some(clustered(sharded, nShards, sortCols)),
+      // blooms are sized from the written bytes: the row count comes
+      // from the staged FOOTERS on the driver, no job
+      written => stampSpec(shardSummary(written, idCol, dataCols, zoneCols,
+          sizeBlooms(bloomCols, footerRowCount(written.inputFiles,
+            spark.sparkContext.hadoopConfiguration), nShards, bloomFpp),
+          sketchCols, quantileCols),
+        shardCol, nShards, sortCols, idCol),
+      linked = Nil, carried = None, shardCol, nShards, retainPrevious)
+  }
+
+  /** The rows of the shards a generation rewrites, laid out for the
+    * staged write: one shuffle keyed on the shard id co-locates each
+    * shard into exactly one of `tasks` tasks (so every `shard=k/` dir
+    * holds ONE file), and rows land sorted within shard on `sortCols`
+    * (Iceberg's write sort order) — parquet row-group stats are then
+    * tight on them, so a selective predicate skips at BOTH
+    * granularities: zone maps drop whole shards, row-group stats drop
+    * pages inside the survivors. The leading `shard` sort key keeps
+    * each output file (the writer splits by partition value)
+    * internally ordered on `sortCols` alone. */
+  private def clustered(rows: DataFrame, tasks: Int,
+                        sortCols: Seq[String]): DataFrame = {
+    val part = rows.repartition(tasks, col("shard"))
+    if (sortCols.isEmpty) part
+    else part.sortWithinPartitions((col("shard") +: sortCols.map(col)): _*)
+  }
+
+  /** Bloom declaration `(cols, mBits, k)` sized for a generation of
+    * `rows` rows over `nShards` shards; None when no column is
+    * bloomed (`rows` is then never evaluated). ×2 slack absorbs shard
+    * skew (hash sharding balances; explicit binning may not) — an
+    * overfull shard degrades toward more false positives (extra
+    * shards read), never false negatives. */
+  private def sizeBlooms(cols: Seq[String], rows: => Long, nShards: Int,
+                         fpp: Double): Option[(Seq[String], Int, Int)] =
+    if (cols.isEmpty) None
+    else {
+      import graft.expressions.BloomOps
+      val perShard = math.max(64L,
+        math.ceil(rows.toDouble * 2 / nShards).toLong)
+      val mBits = BloomOps.sizeFor(perShard, fpp)
+      Some((cols, mBits, BloomOps.hashesFor(perShard, mBits)))
+    }
+
+  /** THE tail of every shard-layout publish (the caller holds the
+    * lease, see [[withPublishLease]]). Publish is ATOMIC at generation
+    * granularity: everything is STAGED beside the live generation in
+    * `_staging_<stamp>`, so a crash or a failing Spark task anywhere up
+    * to the commit marker leaves the previous generation untouched and
+    * fully verifiable — an in-process failure deletes its own staging,
+    * a process KILL's staging is swept by the next [[recoverPublish]].
+    *
+    *  - `rows` (None for the manifest-only doors): the full new
+    *    contents of the shards this generation rewrites, `shard`
+    *    column present, laid out by [[clustered]];
+    *  - `linked`: live shards hard-linked into the generation
+    *    unchanged (zero data I/O; copy fallback, see [[linkOrCopy]]);
+    *  - the manifest: `carried` rows (stamped by the caller) unioned
+    *    with `summarize` over the WRITTEN bytes of `rows`. The manifest
+    *    is an integrity check on the published bytes, so it re-reads
+    *    the files just written rather than re-evaluating the input
+    *    lineage — which would re-run the whole upstream pipeline and
+    *    could describe different rows if the source changed between
+    *    the two evaluations. The read schema is `rows`' own: an empty
+    *    input writes zero part files, and inference would throw. The
+    *    manifest is written BEFORE the links, while the staged data dir
+    *    holds only rewritten shards (a manifest-only door's lineage
+    *    scans the live files, which must also finish before promote
+    *    renames them).
+    *
+    * An explicit assignment (`shardCol`) is range-checked against the
+    * staged manifest before the marker: an id outside `[0, nShards)`
+    * would publish a directory no loader plans for. Then the marker
+    * seals the generation and [[promoteStaged]] swaps it in. Returns
+    * the re-read live manifest. */
+  private def publishGeneration(spark: SparkSession, path: String,
+      base: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
+      rows: Option[DataFrame], summarize: DataFrame => DataFrame,
+      linked: Seq[Long], carried: Option[DataFrame],
+      shardCol: Option[String], nShards: Int,
+      retainPrevious: Boolean): DataFrame = {
+    val stamp = genStamp()
+    val staging = new org.apache.hadoop.fs.Path(base, s"_staging_$stamp")
+    val stagedData = new org.apache.hadoop.fs.Path(staging, "data")
+    val stagedManifest = new org.apache.hadoop.fs.Path(staging, "manifest")
     try {
-      val part = sharded.repartition(nShards, col("shard"))
-      // WITHIN-SHARD SORT ORDER (Iceberg's write sort order): rows of
-      // each shard file land sorted on sortCols, so parquet row-group
-      // stats are tight on them — a selective predicate then skips at
-      // BOTH granularities: zone maps drop whole shards, row-group
-      // stats drop pages inside the survivors. The leading `shard`
-      // sort key keeps each output file (writer splits by partition
-      // value) internally ordered on sortCols alone.
-      val staged =
-        if (sortCols.isEmpty) part
-        else part.sortWithinPartitions(
-          (col("shard") +: sortCols.map(col)): _*)
-      staged.write.mode("overwrite").partitionBy("shard")
-        .parquet(stagedData.toString)
+      val rewritten = rows.map { r =>
+        r.write.mode("overwrite").partitionBy("shard")
+          .parquet(stagedData.toString)
+        summarize(spark.read.schema(r.schema).parquet(stagedData.toString))
+      }
+      if (rows.isEmpty) fs.mkdirs(stagedData)
+      // allowMissingColumns: a live generation published before a stat
+      // column existed (e.g. pre-znull manifests) carries forward with
+      // NULL for the new stat — the documented "unknown" value
+      // consumers must treat conservatively
+      (carried ++ rewritten).reduce(_.unionByName(_, allowMissingColumns = true))
+        .coalesce(1).write.mode("overwrite").parquet(stagedManifest.toString)
+      val livePath = new org.apache.hadoop.fs.Path(base, "data")
+      linked.foreach { s =>
+        val dst = new org.apache.hadoop.fs.Path(stagedData, s"shard=$s")
+        fs.mkdirs(dst)
+        fs.listStatus(new org.apache.hadoop.fs.Path(livePath, s"shard=$s"))
+          .filter(_.isFile).foreach(st => linkOrCopy(fs, st.getPath,
+            new org.apache.hadoop.fs.Path(dst, st.getPath.getName)))
+      }
+      shardCol.foreach { c =>
+        // read ONLY the shard column with an explicit schema: parquet
+        // serves a projection of its columns, and skipping inference
+        // skips a whole driver round trip (round 17)
+        val bad = spark.read.schema(shardOnlySchema)
+          .parquet(stagedManifest.toString)
+          .filter(col("shard").isNull || col("shard") < 0 ||
+            col("shard") >= nShards)
+          .select("shard").collect().map(_.get(0))
+        if (bad.nonEmpty)
+          throw new IllegalArgumentException(
+            s"explicit shardCol '$c' produced shard ids outside " +
+              s"[0, $nShards): ${bad.mkString(", ")}")
+      }
     } catch {
       case e: Throwable => fs.delete(staging, true); throw e
-    }
-    // The manifest is an integrity check on the PUBLISHED bytes, so it
-    // must read the files just written — not re-evaluate the input
-    // lineage, which (a) re-runs the whole upstream pipeline (for the
-    // intended caller, the end of a curation cascade, that doubles its
-    // most expensive stages) and (b) could silently describe different
-    // rows if the source is nondeterministic or changed between the two
-    // evaluations. `shard` comes back as the partition directory column;
-    // dataCols re-selects the original column order so content_hash
-    // hashes the same field sequence the input would. The schema is
-    // passed EXPLICITLY: an empty input writes zero part files and
-    // schema inference would throw, turning "publish an empty corpus"
-    // into an unrelated AnalysisException instead of an empty manifest.
-    val writtenSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "shard", org.apache.spark.sql.types.LongType))
-    val written = spark.read.schema(writtenSchema)
-      .parquet(stagedData.toString)
-    // bloom sizing from the written bytes: parquet answers count()
-    // from footers, so this is a metadata pass, not a scan. ×2 slack
-    // absorbs shard skew (hash sharding balances; explicit binning
-    // may not) — an overfull shard degrades toward more false
-    // positives (extra shards read), never false negatives.
-    val bloomSpec =
-      if (bloomCols.isEmpty) None
-      else {
-        import graft.expressions.BloomOps
-        // row count from the staged FOOTERS on the driver — same
-        // number a parquet-metadata count() job returns, no job
-        val perShard = math.max(64L, math.ceil(
-          footerRowCount(fs, stagedData,
-            spark.sparkContext.hadoopConfiguration).toDouble * 2 / nShards)
-          .toLong)
-        val mBits = BloomOps.sizeFor(perShard, bloomFpp)
-        Some((bloomCols, mBits, BloomOps.hashesFor(perShard, mBits)))
-      }
-    val manifest = stampSpec(
-      shardSummary(written, idCol, dataCols, zoneCols, bloomSpec, sketchCols,
-        quantileCols),
-      shardCol, nShards, sortCols, idCol)
-    manifest.write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(staging, "manifest").toString)
-    // explicit-assignment validation BEFORE the commit marker: a shard
-    // id outside [0, nShards) would publish a directory no loader plans
-    // for — abort here and the crash envelope discards the staging,
-    // old generation intact. One tiny read of the just-written manifest.
-    if (shardCol.nonEmpty) {
-      val bad = spark.read.schema(shardOnlySchema).parquet(
-          new org.apache.hadoop.fs.Path(staging, "manifest").toString)
-        .filter(col("shard").isNull || col("shard") < 0 ||
-          col("shard") >= nShards)
-        .select("shard").collect().map(_.get(0))
-      if (bad.nonEmpty) {
-        fs.delete(staging, true)
-        throw new IllegalArgumentException(
-          s"writeShards: explicit shardCol '${shardCol.get}' produced " +
-            s"ids outside [0, $nShards): ${bad.mkString(", ")}")
-      }
     }
     // COMMIT POINT: the marker flips crash recovery from roll-back
     // (incomplete staging → discard, old generation stands) to
@@ -878,7 +895,8 @@ object Sinks {
     // exist in full.
     fs.create(new org.apache.hadoop.fs.Path(staging, PublishCommitMarker),
       true).close()
-    promoteStaged(fs, base, staging, old, retainPrevious)
+    promoteStaged(fs, base, staging,
+      new org.apache.hadoop.fs.Path(base, s"_old_$stamp"), retainPrevious)
     readMemo(spark, s"$path/manifest")
   }
 
@@ -991,6 +1009,24 @@ object Sinks {
     } else conflict(
       st.map(s => s"age ${System.currentTimeMillis() - s.getModificationTime} ms, " +
         s"ttl $ttlMs ms").getOrElse("racing writer"))
+  }
+
+  /** THE envelope of every shard-layout write door: resolve the
+    * layout's filesystem, take the single-writer lease, finish whatever
+    * a killed predecessor left behind ([[recoverPublish]]) BEFORE
+    * touching the layout, run `body`, release the lease. The lease must
+    * be held before the recovery sweep — two interleaved publishes
+    * would sweep each other's staging as crash debris — so the sweep
+    * only ever meets debris that is ours to sweep. */
+  private def withPublishLease[T](spark: SparkSession, path: String)(
+      body: (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) => T): T = {
+    val base = new org.apache.hadoop.fs.Path(path)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lease = acquirePublishLease(fs, base)
+    try {
+      recoverPublish(fs, base)
+      body(base, fs)
+    } finally releasePublishLease(fs, base, lease)
   }
 
   /** Release the lease IF it is still ours: a stale-reclaim may have
@@ -1273,6 +1309,12 @@ object Sinks {
     * generation union losslessly. */
   private val SketchLgK = 12
 
+  /** The zone-mapped columns a live manifest declares (`zmin_*` names)
+    * — rewrites recompute them, since zones are a layout property. */
+  private def zoneColsOf(live: DataFrame): Seq[String] =
+    live.columns.filter(_.startsWith("zmin_"))
+      .map(_.stripPrefix("zmin_")).toSeq
+
   /** The sketched columns a live manifest declares (`zhll_*` names) —
     * rewrites recompute them so delta/compaction/merge generations
     * keep the distinct door answerable. */
@@ -1369,7 +1411,10 @@ object Sinks {
   private def stampSpec(m: DataFrame, shardCol: Option[String],
                         nShards: Int, sortCols: Seq[String] = Nil,
                         idCol: String = null): DataFrame =
-    m.withColumn("spec_col", lit(shardCol.orNull).cast("string"))
+    // dropping first restamps carried-forward live rows, and conforms
+    // live manifests that predate spec recording
+    m.drop("spec_col", "spec_n", "spec_sort", "spec_id")
+      .withColumn("spec_col", lit(shardCol.orNull).cast("string"))
       .withColumn("spec_n", lit(nShards))
       // the generation's declared within-shard sort order (Iceberg's
       // write sort-order metadata): null = unsorted
@@ -2098,14 +2143,10 @@ object Sinks {
                       retainPrevious: Boolean = false): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     require(bloomFpp > 0 && bloomFpp < 1, s"bloomFpp in (0,1), got $bloomFpp")
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = acquirePublishLease(fs, base)
-    try {
-      // a sealed staging from a crashed publish may itself hold the
-      // newest manifest — recovery first, so the rebuild reads the
-      // converged generation, not a mid-promote mix
-      recoverPublish(fs, base)
+    // the envelope's recovery runs first: a sealed staging from a
+    // crashed publish may itself hold the newest manifest, so the
+    // rebuild reads the converged generation, not a mid-promote mix
+    withPublishLease(spark, path) { (base, fs) =>
       val dataDir = s"$path/data"
       require(fs.exists(new org.apache.hadoop.fs.Path(dataDir)),
         s"rebuildManifest: no data at $dataDir — nothing to rebuild from")
@@ -2129,21 +2170,13 @@ object Sinks {
             s"hash($idCol)")(c => s"explicit $c")} over $nShards shards) " +
             s"does not reproduce the published shard directories " +
             s"(witness: ${bad.head}) — wrong nShards, idCol, or shardCol")
-      val bloomSpec =
-        if (bloomCols.isEmpty) None
-        else {
-          import graft.expressions.BloomOps
-          val perShard = math.max(64L, math.ceil(
-            written.count().toDouble * 2 / nShards).toLong)
-          val mBits = BloomOps.sizeFor(perShard, bloomFpp)
-          Some((bloomCols, mBits, BloomOps.hashesFor(perShard, mBits)))
-        }
       val manifest = stampSpec(
-        shardSummary(written, idCol, dataCols, zoneCols, bloomSpec,
+        shardSummary(written, idCol, dataCols, zoneCols,
+          sizeBlooms(bloomCols, written.count(), nShards, bloomFpp),
           sketchCols, quantileCols),
         shardCol, nShards, sortCols, idCol)
       publishManifestOnly(spark, path, base, fs, manifest, retainPrevious)
-    } finally releasePublishLease(fs, base, lease)
+    }
   }
 
   /** STAT-FAMILY EVOLUTION + HEALING on a live layout — Iceberg's
@@ -2179,12 +2212,8 @@ object Sinks {
                         bloomFpp: Double = 0.01,
                         sketchCols: Seq[String] = Nil,
                         quantileCols: Seq[String] = Nil,
-                        retainPrevious: Boolean = false): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = acquirePublishLease(fs, base)
-    try {
-      recoverPublish(fs, base)
+                        retainPrevious: Boolean = false): DataFrame =
+    withPublishLease(spark, path) { (base, fs) =>
       require(fs.exists(new org.apache.hadoop.fs.Path(base, "manifest")) &&
         fs.exists(new org.apache.hadoop.fs.Path(base, "data")),
         s"declareShardStats: $path is not a published shard layout " +
@@ -2276,37 +2305,31 @@ object Sinks {
         else live.filter(col("n_rows") > 0 &&
             carryFlags.reduce(_ || _))
           .select(col("shard")).collect().map(_.getLong(0)).toSeq
-      if (!newFamily && needy.isEmpty) return live // nothing to do
-      val written = spark.read.schema(writtenSchema).parquet(dataDir)
-      // healing-only reads prune to the carrying shards; a new family
-      // needs every shard's data (stats are functions of the bytes)
-      val scanned =
-        if (newFamily) written
-        else written.filter(col("shard").isin(needy: _*))
-      val bloomSpec =
-        if (bAll.isEmpty) None
-        else bloomSpecOf(live).map { case (_, m, k) => (bAll, m, k) }
-          .orElse {
-            import graft.expressions.BloomOps
-            val perShard = math.max(64L, math.ceil(
-              written.count().toDouble * 2 / nShards).toLong)
-            val mBits = BloomOps.sizeFor(perShard, bloomFpp)
-            Some((bAll, mBits, BloomOps.hashesFor(perShard, mBits)))
-          }
-      val recomputed = stampSpec(
-        shardSummary(scanned, idCol, dataCols, zAll, bloomSpec, sAll, qAll),
-        shardColOpt, nShards, sortCols, idCol)
-      val manifest =
-        if (newFamily) recomputed
-        else stampSpec(
-            live.filter(!col("shard").isin(needy: _*))
-              .drop("spec_col", "spec_n", "spec_sort", "spec_id")
-              .drop(vanishedStatCols: _*),
-            shardColOpt, nShards, sortCols, idCol)
-          .unionByName(recomputed, allowMissingColumns = true)
-      publishManifestOnly(spark, path, base, fs, manifest, retainPrevious)
-    } finally releasePublishLease(fs, base, lease)
-  }
+      if (!newFamily && needy.isEmpty) live // nothing to do
+      else {
+        val written = spark.read.schema(writtenSchema).parquet(dataDir)
+        // healing-only reads prune to the carrying shards; a new family
+        // needs every shard's data (stats are functions of the bytes)
+        val scanned =
+          if (newFamily) written
+          else written.filter(col("shard").isin(needy: _*))
+        val bloomSpec =
+          if (bAll.isEmpty) None
+          else bloomSpecOf(live).map { case (_, m, k) => (bAll, m, k) }
+            .orElse(sizeBlooms(bAll, written.count(), nShards, bloomFpp))
+        val recomputed = stampSpec(
+          shardSummary(scanned, idCol, dataCols, zAll, bloomSpec, sAll, qAll),
+          shardColOpt, nShards, sortCols, idCol)
+        val manifest =
+          if (newFamily) recomputed
+          else stampSpec(
+              live.filter(!col("shard").isin(needy: _*))
+                .drop(vanishedStatCols: _*),
+              shardColOpt, nShards, sortCols, idCol)
+            .unionByName(recomputed, allowMissingColumns = true)
+        publishManifestOnly(spark, path, base, fs, manifest, retainPrevious)
+      }
+    }
 
   /** Shared declaration checks of the stats-recovery doors: every
     * declared column must exist in the published data, quantile
@@ -2335,46 +2358,23 @@ object Sinks {
         s"${writtenSchema(c).dataType.sql} has no rank order)"))
   }
 
-  /** MANIFEST-ONLY publish: stage a generation whose data is the live
-    * generation hard-linked file for file and whose manifest is
-    * `manifestDf`, then seal and promote through the standard
-    * machinery — the stats-recovery doors change what the manifest
+  /** MANIFEST-ONLY publish: a generation whose data is the live
+    * generation hard-linked shard for shard and whose manifest is
+    * `manifestDf` — the stats-recovery doors change what the manifest
     * SAYS, never what the data IS, but they ride the same staged/
-    * marker/promote crash envelope as every publish so a kill at any
-    * point leaves the old state or the complete new one. The
-    * manifest is written (forcing its data scan) BEFORE any live dir
-    * moves. Caller holds the lease. */
+    * marker/promote envelope as every publish, so a kill at any point
+    * leaves the old state or the complete new one. No id is assigned
+    * here, so there is no explicit assignment to range-check. Caller
+    * holds the lease. */
   private def publishManifestOnly(spark: SparkSession, path: String,
       base: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
       manifestDf: DataFrame, retainPrevious: Boolean): DataFrame = {
-    val stamp = genStamp()
-    val staging = new org.apache.hadoop.fs.Path(base, s"_staging_$stamp")
-    val old = new org.apache.hadoop.fs.Path(base, s"_old_$stamp")
-    val stagedData = new org.apache.hadoop.fs.Path(staging, "data")
-    val livePath = new org.apache.hadoop.fs.Path(base, "data")
-    try {
-      // manifest first: its lineage scans the LIVE data files, which
-      // must complete before promote renames them; the staged links
-      // below point at the same inodes either way
-      manifestDf.coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(staging, "manifest").toString)
-      fs.mkdirs(stagedData)
-      fs.listStatus(livePath)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
-        .foreach { d =>
-          val dst = new org.apache.hadoop.fs.Path(stagedData, d.getPath.getName)
-          fs.mkdirs(dst)
-          fs.listStatus(d.getPath).filter(_.isFile).foreach(st =>
-            linkOrCopy(fs, st.getPath,
-              new org.apache.hadoop.fs.Path(dst, st.getPath.getName)))
-        }
-    } catch {
-      case e: Throwable => fs.delete(staging, true); throw e
-    }
-    fs.create(new org.apache.hadoop.fs.Path(staging, PublishCommitMarker),
-      true).close()
-    promoteStaged(fs, base, staging, old, retainPrevious)
-    readMemo(spark, s"$path/manifest")
+    val liveShards = fs.listStatus(new org.apache.hadoop.fs.Path(base, "data"))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
+      .map(_.getPath.getName.stripPrefix("shard=").toLong).toSeq
+    publishGeneration(spark, path, base, fs, rows = None, summarize = identity,
+      linked = liveShards, carried = Some(manifestDf), shardCol = None,
+      nShards = 0, retainPrevious)
   }
 
   /** GROUPED metadata quantiles — [[approxQuantilesShards]] per group
@@ -2640,155 +2640,100 @@ object Sinks {
         s"publishDelta input must be deterministic (it is evaluated " +
           s"twice); found $e — persist()/localCheckpoint() the input first")))
     val spark = df.sparkSession
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = acquirePublishLease(fs, base)
-    try {
-      recoverPublish(fs, base)
-      val livePath = new org.apache.hadoop.fs.Path(base, "data")
+    withPublishLease(spark, path) { (base, fs) =>
       if (!fs.exists(new org.apache.hadoop.fs.Path(base, "manifest")) ||
-          !fs.exists(livePath))
+          !fs.exists(new org.apache.hadoop.fs.Path(base, "data")))
         // nothing to delta against — a first publish is a full publish
-        return writeShardsLeased(df, path, idCol, nShards, spark, base, fs,
+        writeShardsLeased(df, path, idCol, nShards, spark, base, fs,
           retainPrevious, zoneCols, shardCol, sortCols)
-      val dataCols = df.columns.toSeq
-      val sharded = df.withColumn("shard",
-        shardAssignment(idCol, nShards, shardCol))
-      // detection: nShards summary rows vs the live manifest
-      val v2sum = shardSummary(sharded, idCol, dataCols)
-        .withColumnRenamed("n_rows", "new_rows")
-        .withColumnRenamed("content_hash", "new_hash")
-        .select("shard", "new_rows", "new_hash")
-      val live = readMemo(spark, s"$path/manifest")
-      // Zone declarations are a property of the LAYOUT, not of one
-      // publish: carried-forward shards keep their recorded stats, so
-      // a delta publish can only perpetuate the live generation's zone
-      // set — inherit it when none is declared (the rebin path rides
-      // this: zone maps carry across a re-binning for free), and
-      // reject a mismatched redeclaration loudly (computing NEW stats
-      // for carried shards would mean reading them — that is a full
-      // writeShards republish, not a delta).
-      val liveZones = live.columns.filter(_.startsWith("zmin_"))
-        .map(_.stripPrefix("zmin_")).toSeq
-      val effectiveZones =
-        if (zoneCols.isEmpty) liveZones
-        else {
-          require(zoneCols.toSet == liveZones.toSet,
-            s"publishDelta: declared zoneCols (${zoneCols.mkString(", ")}) " +
-              s"differ from the live layout's (${
-                if (liveZones.isEmpty) "none" else liveZones.mkString(", ")
-              }); carried-forward shards keep their recorded stats, so " +
-              "zones can only change through a full writeShards republish")
-          zoneCols
-        }
-      require(effectiveZones.forall(dataCols.contains),
-        s"publishDelta: live zone columns ${effectiveZones.mkString(", ")} " +
-          s"are not all input columns (${dataCols.mkString(", ")}) — " +
-          "republish in full (writeShards) to re-declare zones")
-      // the declared within-shard sort order is a layout property too:
-      // inherit it (rewritten shards stay row-group-clustered like the
-      // carried ones), reject a mismatched redeclaration. Unlike the
-      // zone set (read from column NAMES, so it survives an empty
-      // generation), the sort is read from row data — a ZERO-ROW live
-      // manifest declares nothing, so the caller's declaration stands
-      // (there are no carried shards for it to misdescribe).
-      val liveSort: Option[Seq[String]] =
-        if (!live.columns.contains("spec_sort")) Some(Nil) // legacy: unsorted
-        else live.select("spec_sort").limit(1).collect().headOption
-          .map(r => Option(r.getString(0)).map(_.split(',').toSeq)
-            .getOrElse(Seq.empty[String]))
-      val effectiveSort = liveSort match {
-        case None => sortCols // empty live generation
-        case Some(ls) if sortCols.isEmpty => ls
-        case Some(ls) =>
-          require(sortCols == ls,
-            s"publishDelta: declared sortCols (${sortCols.mkString(", ")}) " +
-              s"differ from the live layout's (${
-                if (ls.isEmpty) "none" else ls.mkString(", ")
-              }); carried-forward shards keep their physical order, so " +
-              "the sort can only change through a full writeShards republish")
-          sortCols
+      else publishDeltaLeased(df, path, idCol, nShards, spark, base, fs,
+        retainPrevious, zoneCols, shardCol, sortCols)
+    }
+  }
+
+  private def publishDeltaLeased(df: DataFrame, path: String, idCol: String,
+      nShards: Int, spark: SparkSession, base: org.apache.hadoop.fs.Path,
+      fs: org.apache.hadoop.fs.FileSystem, retainPrevious: Boolean,
+      zoneCols: Seq[String], shardCol: Option[String],
+      sortCols: Seq[String]): DataFrame = {
+    val dataCols = df.columns.toSeq
+    val sharded = df.withColumn("shard",
+      shardAssignment(idCol, nShards, shardCol))
+    // detection: nShards summary rows vs the live manifest
+    val v2sum = shardSummary(sharded, idCol, dataCols)
+      .withColumnRenamed("n_rows", "new_rows")
+      .withColumnRenamed("content_hash", "new_hash")
+      .select("shard", "new_rows", "new_hash")
+    val live = readMemo(spark, s"$path/manifest")
+    // Zone declarations are a property of the LAYOUT, not of one
+    // publish: carried-forward shards keep their recorded stats, so
+    // a delta publish can only perpetuate the live generation's zone
+    // set — inherit it when none is declared (the rebin path rides
+    // this: zone maps carry across a re-binning for free), and
+    // reject a mismatched redeclaration loudly (computing NEW stats
+    // for carried shards would mean reading them — that is a full
+    // writeShards republish, not a delta).
+    val liveZones = zoneColsOf(live)
+    val effectiveZones =
+      if (zoneCols.isEmpty) liveZones
+      else {
+        require(zoneCols.toSet == liveZones.toSet,
+          s"publishDelta: declared zoneCols (${zoneCols.mkString(", ")}) " +
+            s"differ from the live layout's (${
+              if (liveZones.isEmpty) "none" else liveZones.mkString(", ")
+            }); carried-forward shards keep their recorded stats, so " +
+            "zones can only change through a full writeShards republish")
+        zoneCols
       }
-      require(effectiveSort.forall(dataCols.contains),
-        s"publishDelta: live sort columns ${effectiveSort.mkString(", ")} " +
-          s"are not all input columns — republish in full to re-declare")
-      val cls = live.select(col("shard"), col("n_rows"), col("content_hash"))
-        .join(v2sum, Seq("shard"), "full_outer").collect()
-      val unchanged = cls.filter(r => !r.isNullAt(1) && !r.isNullAt(3) &&
-        r.getLong(1) == r.getLong(3) && r.getLong(2) == r.getLong(4))
-        .map(_.getLong(0)).toSet
-      val toWrite = cls.filter(r => !r.isNullAt(3))
-        .map(_.getLong(0)).filterNot(unchanged).toSeq.sorted
-      val stamp = genStamp()
-      val staging = new org.apache.hadoop.fs.Path(base, s"_staging_$stamp")
-      val old = new org.apache.hadoop.fs.Path(base, s"_old_$stamp")
-      val stagedData = new org.apache.hadoop.fs.Path(staging, "data")
-      try {
-        if (toWrite.nonEmpty) {
-          val part = sharded.filter(col("shard").isin(toWrite: _*))
-            .repartition(math.min(nShards, toWrite.size), col("shard"))
-          (if (effectiveSort.isEmpty) part
-           else part.sortWithinPartitions(
-             (col("shard") +: effectiveSort.map(col)): _*))
-            .write.mode("overwrite").partitionBy("shard")
-            .parquet(stagedData.toString)
-        } else fs.mkdirs(stagedData)
-        // unchanged shards: link the live generation's files in place
-        unchanged.toSeq.sorted.foreach { s =>
-          val srcDir = new org.apache.hadoop.fs.Path(livePath, s"shard=$s")
-          val dstDir = new org.apache.hadoop.fs.Path(stagedData, s"shard=$s")
-          fs.mkdirs(dstDir)
-          fs.listStatus(srcDir).filter(_.isFile).foreach(st =>
-            linkOrCopy(fs, st.getPath,
-              new org.apache.hadoop.fs.Path(dstDir, st.getPath.getName)))
-        }
-        // staged manifest: written-bytes summaries for rewritten
-        // shards, carried-forward live rows for linked ones
-        val writtenSchema = org.apache.spark.sql.types.StructType(
-          df.schema.fields :+ org.apache.spark.sql.types.StructField(
-            "shard", org.apache.spark.sql.types.LongType))
-        // every manifest row of the NEW generation carries the NEW
-        // spec — including carried-forward shards: their content hash
-        // proved the member set identical under the new assignment, so
-        // the new spec describes them too. Dropping first also
-        // conforms live manifests that predate spec recording.
-        val rewrittenManifest =
-          if (toWrite.isEmpty)
-            stampSpec(live.drop("spec_col", "spec_n", "spec_sort", "spec_id")
-              .filter(lit(false)), shardCol, nShards, effectiveSort, idCol)
-          else stampSpec(shardSummary(
-            spark.read.schema(writtenSchema).parquet(stagedData.toString)
-              .filter(col("shard").isin(toWrite: _*)), idCol, dataCols,
-            // bloom/sketch stats are a layout property like zones:
-            // rewritten shards rebuild them under the live
-            // generation's declaration so probes and distinct unions
-            // stay comparable across generations
-            effectiveZones, bloomSpecOf(live), sketchColsOf(live),
-            quantileColsOf(live)),
-            shardCol, nShards, effectiveSort, idCol)
-        val keptManifest = stampSpec(
-          (if (unchanged.isEmpty) live.filter(lit(false))
-           else live.filter(col("shard").isin(unchanged.toSeq: _*)))
-            .drop("spec_col", "spec_n", "spec_sort", "spec_id"), shardCol,
-          nShards, effectiveSort, idCol)
-        // allowMissingColumns: a live generation published before a
-        // stat column existed (e.g. pre-znull manifests) carries
-        // forward with NULL for the new stat — the documented
-        // "unknown" value consumers must treat conservatively. Zone
-        // SET mismatches never reach here (validated above, loudly).
-        keptManifest.unionByName(rewrittenManifest,
-            allowMissingColumns = true)
-          .coalesce(1)
-          .write.mode("overwrite")
-          .parquet(new org.apache.hadoop.fs.Path(staging, "manifest").toString)
-      } catch {
-        case e: Throwable => fs.delete(staging, true); throw e
-      }
-      fs.create(new org.apache.hadoop.fs.Path(staging, PublishCommitMarker),
-        true).close()
-      promoteStaged(fs, base, staging, old, retainPrevious)
-      readMemo(spark, s"$path/manifest")
-    } finally releasePublishLease(fs, base, lease)
+    require(effectiveZones.forall(dataCols.contains),
+      s"publishDelta: live zone columns ${effectiveZones.mkString(", ")} " +
+        s"are not all input columns (${dataCols.mkString(", ")}) — " +
+        "republish in full (writeShards) to re-declare zones")
+    // the declared within-shard sort order is a layout property too:
+    // inherit it (rewritten shards stay row-group-clustered like the
+    // carried ones), reject a mismatched redeclaration. Unlike the
+    // zone set (read from column NAMES, so it survives an empty
+    // generation), the sort is read from row data — a ZERO-ROW live
+    // manifest declares nothing, so the caller's declaration stands
+    // (there are no carried shards for it to misdescribe).
+    val liveSort: Option[Seq[String]] =
+      if (!live.columns.contains("spec_sort")) Some(Nil) // legacy: unsorted
+      else live.select("spec_sort").limit(1).collect().headOption
+        .map(r => Option(r.getString(0)).map(_.split(',').toSeq)
+          .getOrElse(Seq.empty[String]))
+    val effectiveSort = liveSort match {
+      case None => sortCols // empty live generation
+      case Some(ls) if sortCols.isEmpty => ls
+      case Some(ls) =>
+        require(sortCols == ls,
+          s"publishDelta: declared sortCols (${sortCols.mkString(", ")}) " +
+            s"differ from the live layout's (${
+              if (ls.isEmpty) "none" else ls.mkString(", ")
+            }); carried-forward shards keep their physical order, so " +
+            "the sort can only change through a full writeShards republish")
+        sortCols
+    }
+    require(effectiveSort.forall(dataCols.contains),
+      s"publishDelta: live sort columns ${effectiveSort.mkString(", ")} " +
+        s"are not all input columns — republish in full to re-declare")
+    val cls = live.select(col("shard"), col("n_rows"), col("content_hash"))
+      .join(v2sum, Seq("shard"), "full_outer").collect()
+    val unchanged = cls.filter(r => !r.isNullAt(1) && !r.isNullAt(3) &&
+      r.getLong(1) == r.getLong(3) && r.getLong(2) == r.getLong(4))
+      .map(_.getLong(0)).toSet
+    val toWrite = cls.filter(r => !r.isNullAt(3))
+      .map(_.getLong(0)).filterNot(unchanged).toSeq.sorted
+    // every manifest row of the NEW generation carries the NEW spec —
+    // including carried-forward shards: their content hash proved the
+    // member set identical under the new assignment, so the new spec
+    // describes them too. Bloom/sketch stats are a layout property
+    // like zones: rewritten shards rebuild them under the live
+    // generation's declaration so probes and distinct unions stay
+    // comparable across generations.
+    publishRewrite(spark, path, base, fs, live,
+      sharded.filter(col("shard").isin(toWrite: _*)), toWrite,
+      unchanged.toSeq.sorted, bloomSpecOf(live), idCol, dataCols,
+      effectiveZones, shardCol, nShards, effectiveSort, retainPrevious)
   }
 
   /** ROW-LEVEL DELETE on a published shard layout — the takedown door
@@ -2832,14 +2777,9 @@ object Sinks {
     * delete never changes the layout contract. Returns the live
     * manifest after the publish. */
   def deleteWhere(spark: SparkSession, path: String, idCol: String,
-                  predicate: Column, retainPrevious: Boolean = false): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = acquirePublishLease(fs, base)
-    try {
-      recoverPublish(fs, base)
-      val manifestPath = new org.apache.hadoop.fs.Path(base, "manifest")
-      require(fs.exists(manifestPath) &&
+                  predicate: Column, retainPrevious: Boolean = false): DataFrame =
+    withPublishLease(spark, path) { (base, fs) =>
+      require(fs.exists(new org.apache.hadoop.fs.Path(base, "manifest")) &&
         fs.exists(new org.apache.hadoop.fs.Path(base, "data")),
         s"deleteWhere: $path is not a published shard layout")
       val live = readMemo(spark, s"$path/manifest")
@@ -2847,39 +2787,38 @@ object Sinks {
         throw new IllegalArgumentException(
           s"deleteWhere: the live manifest of $path predates partition-spec " +
             "recording; republish (writeShards) once to stamp it"))
-      if (meta.isEmpty) return live // empty corpus: nothing to delete
-      val shardColOpt = meta.specCol
-      val nShards = meta.specN
-      val sortCols = meta.sortCols
-      val zones = live.columns.filter(_.startsWith("zmin_"))
-        .map(_.stripPrefix("zmin_")).toSeq
-      val dataDir = s"$path/data"
-      // detection: which shards hold ≥1 matching row (bounded collect,
-      // ≤ nShards rows — the manifest envelope)
-      val detect = readMemo(spark, dataDir).filter(predicate)
-      // the predicate runs twice (detection + rewrite): the same
-      // analyzed-plan determinism gate publishDelta applies to its
-      // input (a rand() takedown would detect one shard set and
-      // rewrite another)
-      detect.queryExecution.optimizedPlan.foreach(n =>
-        n.expressions.foreach(e => require(e.deterministic,
-          s"deleteWhere predicate must be deterministic (it is " +
-            s"evaluated twice); found $e")))
-      val hit = detect.select(col("shard").cast("long")).distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      if (hit.isEmpty) return live // no-op: no generation churn
-      val (dataCols, writtenSchema) = layoutSchema(spark, dataDir)
-      // rewrite ONLY the affected shard dirs, minus matching rows
-      // (NULL predicate keeps the row — SQL DELETE semantics)
-      val src = spark.read.schema(writtenSchema)
-        .option("basePath", dataDir)
-        .parquet(hit.map(s => s"$dataDir/shard=$s"): _*)
-      publishRewrite(spark, path, base, fs, live, meta,
-        src.filter(!coalesce(predicate, lit(false))), hit, idCol,
-        dataCols, writtenSchema, zones, shardColOpt, nShards, sortCols,
-        retainPrevious)
-    } finally releasePublishLease(fs, base, lease)
-  }
+      if (meta.isEmpty) live // empty corpus: nothing to delete
+      else {
+        val dataDir = s"$path/data"
+        // detection: which shards hold ≥1 matching row (bounded collect,
+        // ≤ nShards rows — the manifest envelope)
+        val detect = readMemo(spark, dataDir).filter(predicate)
+        // the predicate runs twice (detection + rewrite): the same
+        // analyzed-plan determinism gate publishDelta applies to its
+        // input (a rand() takedown would detect one shard set and
+        // rewrite another)
+        detect.queryExecution.optimizedPlan.foreach(n =>
+          n.expressions.foreach(e => require(e.deterministic,
+            s"deleteWhere predicate must be deterministic (it is " +
+              s"evaluated twice); found $e")))
+        val hit = detect.select(col("shard").cast("long")).distinct()
+          .collect().map(_.getLong(0)).sorted.toSeq
+        if (hit.isEmpty) live // no-op: no generation churn
+        else {
+          val (dataCols, writtenSchema) = layoutSchema(spark, dataDir)
+          // rewrite ONLY the affected shard dirs, minus matching rows
+          // (NULL predicate keeps the row — SQL DELETE semantics)
+          val src = spark.read.schema(writtenSchema)
+            .option("basePath", dataDir)
+            .parquet(hit.map(s => s"$dataDir/shard=$s"): _*)
+          publishRewrite(spark, path, base, fs, live,
+            src.filter(!coalesce(predicate, lit(false))), hit,
+            (meta.liveShards -- hit).toSeq.sorted, meta.bloomSpec, idCol,
+            dataCols, zoneColsOf(live), meta.specCol, meta.specN,
+            meta.sortCols, retainPrevious)
+        }
+      }
+    }
 
   /** Schema of a layout's published bytes: the data columns in file
     * order, and the read schema with `shard` typed LONG explicitly
@@ -2893,84 +2832,34 @@ object Sinks {
         "shard", org.apache.spark.sql.types.LongType)))
   }
 
-  /** Shared stage/link/seal/promote tail of the row-level write doors
-    * ([[deleteWhere]], [[mergeRows]]): write `rows` — the new contents
-    * of exactly the `rewrite` shards, `shard` column present — into a
-    * staged generation, hard-link every other live shard, rebuild the
-    * manifest (written-bytes summaries with recomputed zone/null stats
-    * for rewritten shards, carried live rows for linked ones), validate
-    * explicit shard ids, seal, promote. Caller holds the lease. */
+  /** The carry-forward generation of the doors that rewrite SOME
+    * shards of a live layout ([[publishDelta]], [[deleteWhere]],
+    * [[mergeRows]]): `rows` — the new contents of exactly the `rewrite`
+    * shards, `shard` column present — are written with zone/null stats
+    * recomputed from the written bytes under the live generation's
+    * stat declarations (`bloom` is evaluated only when something is
+    * rewritten), and the `kept` live shards are hard-linked with their
+    * manifest rows restamped under the generation's spec. Caller holds
+    * the lease. */
   private def publishRewrite(spark: SparkSession, path: String,
       base: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      live: DataFrame, meta: LiveManifestMeta, rows: DataFrame,
-      rewrite: Seq[Long],
-      idCol: String, dataCols: Seq[String],
-      writtenSchema: org.apache.spark.sql.types.StructType,
-      zones: Seq[String], shardColOpt: Option[String], nShards: Int,
-      sortCols: Seq[String], retainPrevious: Boolean): DataFrame = {
-    val kept = (meta.liveShards -- rewrite).toSeq.sorted
-    val stamp = genStamp()
-    val staging = new org.apache.hadoop.fs.Path(base, s"_staging_$stamp")
-    val old = new org.apache.hadoop.fs.Path(base, s"_old_$stamp")
-    val stagedData = new org.apache.hadoop.fs.Path(staging, "data")
-    val livePath = new org.apache.hadoop.fs.Path(base, "data")
-    try {
-      val part = rows
-        .repartition(math.min(nShards, rewrite.size), col("shard"))
-      (if (sortCols.isEmpty) part
-       else part.sortWithinPartitions(
-         (col("shard") +: sortCols.map(col)): _*))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(stagedData.toString)
-      kept.foreach { s =>
-        val srcDir = new org.apache.hadoop.fs.Path(livePath, s"shard=$s")
-        val dstDir = new org.apache.hadoop.fs.Path(stagedData, s"shard=$s")
-        fs.mkdirs(dstDir)
-        fs.listStatus(srcDir).filter(_.isFile).foreach(st =>
-          linkOrCopy(fs, st.getPath,
-            new org.apache.hadoop.fs.Path(dstDir, st.getPath.getName)))
-      }
-      // written-bytes manifest rows for rewritten shards (zone/null
-      // stats recomputed), carried live rows for linked ones
-      val rewrittenManifest = stampSpec(shardSummary(
-        spark.read.schema(writtenSchema).parquet(stagedData.toString)
-          .filter(col("shard").isin(rewrite: _*)), idCol, dataCols, zones,
-        meta.bloomSpec, sketchColsOf(live), quantileColsOf(live)),
-        shardColOpt, nShards, sortCols, idCol)
-      val keptManifest = stampSpec(
-        (if (kept.isEmpty) live.filter(lit(false))
-         else live.filter(col("shard").isin(kept: _*)))
-          .drop("spec_col", "spec_n", "spec_sort", "spec_id"),
-        shardColOpt, nShards, sortCols, idCol)
-      keptManifest.unionByName(rewrittenManifest,
-          allowMissingColumns = true)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(staging, "manifest").toString)
-      // explicit-assignment validation BEFORE the commit marker (the
-      // writeShards gate): a merged-in shard id outside [0, nShards)
-      // would publish a directory no loader plans for
-      if (shardColOpt.nonEmpty) {
-        // read ONLY the shard column with an explicit schema: parquet
-        // serves a projection of its columns, and skipping inference
-        // skips a whole driver round trip (round 17)
-        val bad = spark.read.schema(shardOnlySchema).parquet(
-            new org.apache.hadoop.fs.Path(staging, "manifest").toString)
-          .filter(col("shard").isNull || col("shard") < 0 ||
-            col("shard") >= nShards)
-          .select("shard").collect().map(_.get(0))
-        if (bad.nonEmpty)
-          throw new IllegalArgumentException(
-            s"row-level publish produced shard ids outside " +
-              s"[0, $nShards): ${bad.mkString(", ")}")
-      }
-    } catch {
-      case e: Throwable => fs.delete(staging, true); throw e
-    }
-    fs.create(new org.apache.hadoop.fs.Path(staging, PublishCommitMarker),
-      true).close()
-    promoteStaged(fs, base, staging, old, retainPrevious)
-    readMemo(spark, s"$path/manifest")
-  }
+      live: DataFrame, rows: DataFrame, rewrite: Seq[Long], kept: Seq[Long],
+      bloom: => Option[(Seq[String], Int, Int)],
+      idCol: String, dataCols: Seq[String], zones: Seq[String],
+      shardCol: Option[String], nShards: Int,
+      sortCols: Seq[String], retainPrevious: Boolean): DataFrame =
+    publishGeneration(spark, path, base, fs,
+      if (rewrite.isEmpty) None
+      else Some(clustered(rows, math.min(nShards, rewrite.size), sortCols)),
+      written => stampSpec(shardSummary(written, idCol, dataCols, zones,
+          bloom, sketchColsOf(live), quantileColsOf(live)),
+        shardCol, nShards, sortCols, idCol),
+      kept,
+      Some(stampSpec(
+        if (kept.isEmpty) live.filter(lit(false))
+        else live.filter(col("shard").isin(kept: _*)),
+        shardCol, nShards, sortCols, idCol)),
+      shardCol, nShards, retainPrevious)
 
   /** ROW-LEVEL MERGE (upsert + delete) on a published shard layout —
     * Iceberg's `MERGE INTO` under copy-on-write, WITHOUT re-supplying
@@ -3002,12 +2891,8 @@ object Sinks {
     * inherited, never changed here. Returns the live manifest. */
   def mergeRows(spark: SparkSession, path: String, patch: DataFrame,
                 idCol: String, deleteWhen: Option[Column] = None,
-                retainPrevious: Boolean = false): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = acquirePublishLease(fs, base)
-    try {
-      recoverPublish(fs, base)
+                retainPrevious: Boolean = false): DataFrame =
+    withPublishLease(spark, path) { (base, fs) =>
       require(fs.exists(new org.apache.hadoop.fs.Path(base, "manifest")) &&
         fs.exists(new org.apache.hadoop.fs.Path(base, "data")),
         s"mergeRows: $path is not a published shard layout")
@@ -3021,9 +2906,6 @@ object Sinks {
           "the initial corpus first")
       val shardColOpt = meta.specCol
       val nShards = meta.specN
-      val sortCols = meta.sortCols
-      val zones = live.columns.filter(_.startsWith("zmin_"))
-        .map(_.stripPrefix("zmin_")).toSeq
       val dataDir = s"$path/data"
       val (dataCols, writtenSchema) = layoutSchema(spark, dataDir)
       require(dataCols.forall(patch.columns.contains),
@@ -3062,43 +2944,45 @@ object Sinks {
         count_distinct(when(!delFlag, col(idCol))),
         count(when(col("shard").isNull, lit(1))),
         collect_set(col("shard"))).collect().head
-      if (u.getLong(0) == 0L) return live // empty patch: no-op
-      require(u.getLong(1) == u.getLong(2),
-        s"mergeRows: upsert ids ('$idCol') must be unique (delete " +
-          s"rows may repeat an id) — got ${u.getLong(1)} upsert " +
-          s"rows, ${u.getLong(2)} distinct ids")
-      // a NULL explicit-assignment value would route rows to a
-      // partition no loader plans for — fail BEFORE any write (the
-      // staged-manifest range gate still backstops out-of-range ids)
-      require(u.getLong(3) == 0L,
-        s"mergeRows: ${u.getLong(3)} patch rows carry a NULL shard " +
-          s"(the layout's assignment column '${shardColOpt.getOrElse(idCol)}' " +
-          "must be non-null)")
-      val hit = u.getSeq[Long](4).sorted
-      val liveShards = meta.liveShards
-      val existingHit = hit.filter(liveShards.contains)
-      // rewrite = existing rows of the target shards minus patched
-      // ids, plus the patch's upsert rows (delete-marked rows simply
-      // contribute no replacement). The anti-join keys on the id; the
-      // patch side is merge-sized, so AQE broadcasts it.
-      val existing =
-        if (existingHit.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], writtenSchema)
-        else spark.read.schema(writtenSchema).option("basePath", dataDir)
-          .parquet(existingHit.map(s => s"$dataDir/shard=$s"): _*)
-      val keptRows = existing.join(
-        sharded.select(col(idCol)).withColumnRenamed(idCol, "_mid"),
-        existing(idCol) === col("_mid"), "left_anti")
-      val upserts = deleteWhen.fold(sharded)(d =>
-        sharded.filter(!coalesce(d, lit(false))))
-        .select((dataCols.map(col) :+ col("shard")): _*)
-      publishRewrite(spark, path, base, fs, live, meta,
-        keptRows.unionByName(upserts), hit, idCol, dataCols,
-        writtenSchema, zones, shardColOpt, nShards, sortCols,
-        retainPrevious)
-    } finally releasePublishLease(fs, base, lease)
-  }
+      if (u.getLong(0) == 0L) live // empty patch: no-op
+      else {
+        require(u.getLong(1) == u.getLong(2),
+          s"mergeRows: upsert ids ('$idCol') must be unique (delete " +
+            s"rows may repeat an id) — got ${u.getLong(1)} upsert " +
+            s"rows, ${u.getLong(2)} distinct ids")
+        // a NULL explicit-assignment value would route rows to a
+        // partition no loader plans for — fail BEFORE any write (the
+        // staged-manifest range gate still backstops out-of-range ids)
+        require(u.getLong(3) == 0L,
+          s"mergeRows: ${u.getLong(3)} patch rows carry a NULL shard " +
+            s"(the layout's assignment column '${shardColOpt.getOrElse(idCol)}' " +
+            "must be non-null)")
+        val hit = u.getSeq[Long](4).sorted
+        val liveShards = meta.liveShards
+        val existingHit = hit.filter(liveShards.contains)
+        // rewrite = existing rows of the target shards minus patched
+        // ids, plus the patch's upsert rows (delete-marked rows simply
+        // contribute no replacement). The anti-join keys on the id; the
+        // patch side is merge-sized, so AQE broadcasts it.
+        val existing =
+          if (existingHit.isEmpty)
+            spark.createDataFrame(
+              spark.sparkContext.emptyRDD[Row], writtenSchema)
+          else spark.read.schema(writtenSchema).option("basePath", dataDir)
+            .parquet(existingHit.map(s => s"$dataDir/shard=$s"): _*)
+        val keptRows = existing.join(
+          sharded.select(col(idCol)).withColumnRenamed(idCol, "_mid"),
+          existing(idCol) === col("_mid"), "left_anti")
+        val upserts = deleteWhen.fold(sharded)(d =>
+          sharded.filter(!coalesce(d, lit(false))))
+          .select((dataCols.map(col) :+ col("shard")): _*)
+        publishRewrite(spark, path, base, fs, live,
+          keptRows.unionByName(upserts), hit,
+          (liveShards -- hit).toSeq.sorted, meta.bloomSpec, idCol,
+          dataCols, zoneColsOf(live), shardColOpt, nShards, meta.sortCols,
+          retainPrevious)
+      }
+    }
 
   /** ROW-LEVEL CDC between a retained generation and the live corpus —
     * the Delta/Iceberg change-data-feed shape, planned from two

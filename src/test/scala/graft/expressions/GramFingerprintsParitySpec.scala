@@ -61,19 +61,4 @@ class GramFingerprintsParitySpec extends SparkTestBase {
       df.select(TextSignatures.gramFingerprints(col("_toks"), 2)).collect())
     assert(e.getMessage != null)
   }
-
-  test("exciseSharedSpans: sharedExchange=true and false are " +
-    "value-identical (the gate changes the plan, never the rows)") {
-    val docs = graft.Tables(spark, sf).documents
-      .select(col("doc_id"), col("text"))
-    def run(shared: Boolean) = {
-      spark.conf.set("spark.graft.excise.sharedExchange", shared.toString)
-      try graft.operators.Dedup
-        .exciseSharedSpans(docs, "text", "doc_id", k = 8, minDf = 2)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3))).toSet
-      finally spark.conf.unset("spark.graft.excise.sharedExchange")
-    }
-    assert(run(shared = true) == run(shared = false))
-  }
 }

@@ -386,22 +386,14 @@ class DedupSpec extends SparkTestBase {
     val small = Dedup.clusterDuplicates(pairs, spark)
       .orderBy("id").as[(Long, Long)].collect()
     assert(small.toSeq == expected)
-    // …the distributed alternating-star path (forced via limit 0;
+    // …and the distributed alternating-star path (forced via limit 0;
     // unpersisted per the caller-must-unpersist contract — a lingering
     // cache here would ALIAS the scoped test's identical plan through
-    // the CacheManager and mask its persist precondition)…
+    // the CacheManager and mask its persist precondition) agree
     val largeDf = Dedup.clusterDuplicates(pairs, spark, smallEdgeLimit = 0L)
     val large = largeDf.orderBy("id").as[(Long, Long)].collect()
     largeDf.unpersist()
     assert(large.toSeq == expected)
-    // …and the retained GraphX variant (A/B gate) agree exactly
-    spark.conf.set("spark.graft.cluster.engine", "graphx")
-    try {
-      val gxDf = Dedup.clusterDuplicates(pairs, spark, smallEdgeLimit = 0L)
-      val gx = gxDf.orderBy("id").as[(Long, Long)].collect()
-      gxDf.unpersist()
-      assert(gx.toSeq == expected)
-    } finally spark.conf.unset("spark.graft.cluster.engine")
   }
 
   test("distributed star collapse equals union-find on seeded random " +
@@ -524,21 +516,22 @@ class DedupSpec extends SparkTestBase {
     assert(fast == brute)
   }
 
-  test("q61 pipeline: GraphX path produces the oracle-pinned result bit for bit") {
+  test("q61 pipeline: star path produces the oracle-pinned result bit for bit") {
     // the driver's CORRECTNESS run only ever exercises the union-find
     // branch (q61's edge set is far below the default limit); this
     // drives the EXACT q61 pipeline — same fixture, same edges — down
-    // the Pregel branch and pins it against the default path, which
-    // the DuckDB recursive-CTE oracle certifies every round
+    // the distributed star-collapse branch and pins it against the
+    // default path, which the DuckDB recursive-CTE oracle certifies
+    // every round
     val default = graft.SparkEntry.queries("q61_cluster_cc")(spark, sf)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(default.nonEmpty)
     spark.conf.set("spark.graft.cluster.smallEdgeLimit", "0")
     try {
-      val viaGraphX = graft.SparkEntry.queries("q61_cluster_cc")(spark, sf)
+      val viaStars = graft.SparkEntry.queries("q61_cluster_cc")(spark, sf)
         .orderBy("id").as[(Long, Long)].collect().toSeq
-      assert(viaGraphX == default,
-        "GraphX q61 diverged from the oracle-pinned union-find result")
+      assert(viaStars == default,
+        "star-collapse q61 diverged from the oracle-pinned union-find result")
     } finally spark.conf.unset("spark.graft.cluster.smallEdgeLimit")
   }
 

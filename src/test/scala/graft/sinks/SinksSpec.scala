@@ -319,6 +319,22 @@ class SinksSpec extends SparkTestBase {
     }
     // ... and the aborted publish left no committed generation behind
     assert(!new java.io.File(dir + "2/data").exists())
+    // the delta doors run the same gate on a live layout, which stays
+    // the committed generation
+    val live = spark.read.parquet(s"$dir/manifest").orderBy("shard")
+      .collect().toSeq
+    Seq[() => Any](
+      () => Sinks.publishDelta(rows, dir, "doc_id", nShards = 5,
+        zoneCols = Seq("ts"), shardCol = Some("bucket")),
+      () => Sinks.rebinShards(rows, dir, "doc_id", nShards = 5,
+        zoneCols = Seq("ts"), shardCol = Some("bucket"))).foreach { door =>
+      intercept[IllegalArgumentException](door())
+      assert(spark.read.parquet(s"$dir/manifest").orderBy("shard")
+        .collect().toSeq == live)
+      assert((0 until 10).forall(s =>
+        new java.io.File(s"$dir/data/shard=$s").exists()) &&
+        !new java.io.File(dir).list().exists(_.startsWith("_staging_")))
+    }
   }
 
   test("zone maps survive a delta republish (changed + linked shards both carry stats)") {
@@ -382,25 +398,43 @@ class SinksSpec extends SparkTestBase {
       "lease must be released after a successful publish")
     val before = spark.read.parquet(s"$dir/manifest")
       .orderBy("shard").collect().toSeq
-    // writer A holds a fresh lease (as if mid-publish); writer B must
-    // refuse WITHOUT touching the layout
+    // writer A holds a fresh lease (as if mid-publish); every write
+    // door of writer B must refuse WITHOUT touching the layout
     val token = Sinks.acquirePublishLease(fs, new Path(dir))
-    val e = intercept[java.util.ConcurrentModificationException] {
-      Sinks.writeShards(docs.limit(50), dir, "doc_id", nShards = 4)
+    val lock = new Path(dir, Sinks.PublishLock)
+    def held(): String = {
+      val in = fs.open(lock)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
     }
-    assert(e.getMessage.contains("lease"), e.getMessage)
-    assert(spark.read.parquet(s"$dir/manifest")
-      .orderBy("shard").collect().toSeq == before,
-      "refused publish must leave the live generation untouched")
-    assert(fs.listStatus(new Path(dir)).map(_.getPath.getName)
-      .count(_.startsWith("_staging_")) == 0,
-      "refused publish must not stage anything")
-    // a refused writer must NOT have released the holder's lease
-    assert(fs.exists(new Path(dir, Sinks.PublishLock)),
-      "the holder's lease must survive a refused writer")
+    val doors = Seq[(String, () => Any)](
+      "writeShards" -> (() =>
+        Sinks.writeShards(docs.limit(50), dir, "doc_id", nShards = 4)),
+      "publishDelta" -> (() =>
+        Sinks.publishDelta(docs.limit(50), dir, "doc_id", nShards = 4)),
+      "rebuildManifest" -> (() =>
+        Sinks.rebuildManifest(spark, dir, "doc_id", nShards = 4)),
+      "declareShardStats" -> (() =>
+        Sinks.declareShardStats(spark, dir, zoneCols = Seq("doc_id"))),
+      "deleteWhere" -> (() =>
+        Sinks.deleteWhere(spark, dir, "doc_id", col("doc_id") === 1L)),
+      "mergeRows" -> (() =>
+        Sinks.mergeRows(spark, dir, docs.limit(5), "doc_id")))
+    doors.foreach { case (door, run) =>
+      val e = intercept[java.util.ConcurrentModificationException](run())
+      assert(e.getMessage.contains("lease"), s"$door: ${e.getMessage}")
+      assert(spark.read.parquet(s"$dir/manifest")
+        .orderBy("shard").collect().toSeq == before,
+        s"refused $door must leave the live generation untouched")
+      assert(fs.listStatus(new Path(dir)).map(_.getPath.getName)
+        .count(_.startsWith("_staging_")) == 0,
+        s"refused $door must not stage anything")
+      // a refused writer must NOT have released the holder's lease
+      assert(fs.exists(lock) && held() == token,
+        s"the holder's lease must survive a refused $door")
+    }
     // the holder crashes: its lease goes stale and the next writer
     // reclaims it and publishes
-    val lock = new Path(dir, Sinks.PublishLock)
     fs.setTimes(lock,
       System.currentTimeMillis() - Sinks.PublishLeaseTtlMs - 60_000, -1)
     Sinks.writeShards(docs.limit(50), dir, "doc_id", nShards = 4)
@@ -417,7 +451,6 @@ class SinksSpec extends SparkTestBase {
       .agg(org.apache.spark.sql.functions.sum("n_rows")).head.getLong(0) == 50,
       "reclaimed lease must allow the publish through")
     assert(!fs.exists(lock), "new publish must release its own lease")
-    token.nonEmpty // silence unused warning
   }
 
   test("publishDelta rewrites only changed shards, links the rest, and " +
