@@ -140,18 +140,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val ioFloor = sys.env.getOrElse("SPARK_GRAFT_IO_FLOOR", "150").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf: the injected rules/functions (ZoneMapSkipping,
-      // ManifestAggregates, SQL surface) must be live in every main
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // static conf: codegen-class cache sized to the catalog's
-      // fragment working set (default 100 thrashes across 126 queries
-      // — see GraftSession.codegenCacheEntries)
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.codegenCacheEntries)
       .getOrCreate()
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Rewrites a testdata scale dir into a multi-file (and optionally
@@ -106,10 +106,8 @@ object FixtureGen {
     val dst = if (args.length > 1) args(1) else "fixtures/sf0.1x24"
     val nFiles = if (args.length > 2) args(2).toInt else 24
     val replicas = if (args.length > 3) args(3).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = GraftSession.builder("8")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")

@@ -16,7 +16,7 @@ import graft.operators.{Chunking, Sampling}
   * registered via `SparkSessionExtensions`, not ad-hoc).
   *
   * Enable with `spark.sql.extensions=graft.GraftExtensions` (set by
-  * `GraftSession.local`), or pass to `SparkSession.builder
+  * `GraftSession.staticConf`), or pass to `SparkSession.builder
   * .withExtensions`. Registered:
   *
   *   - `minhash_sig(text[, k[, shingleN]])` → array<bigint>

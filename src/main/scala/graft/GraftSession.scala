@@ -96,16 +96,31 @@ object GraftSession {
   val codegenCacheEntries: String =
     sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
 
+  /** Builder-time (STATIC) confs of every session the engine builds,
+    * defined once so that `Bench`, `Verify` and the workbench mains run
+    * the engine the specs and the lakehouse run:
+    *   - the native expressions as SQL functions (minhash_sig,
+    *     simhash_sig, array_dot, marker_counts) and the planner rules,
+    *   - the codegen cache sized above,
+    *   - `file:` paths through the fork-free local filesystem
+    *     ([[graft.storage.LocalFs]]). */
+  val staticConf: Map[String, String] = Map(
+    "spark.ui.enabled" -> "false",
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.sql.codegen.cache.maxEntries" -> codegenCacheEntries,
+  ) ++ graft.storage.LocalFs.sessionConf
+
+  /** A `local[cores]` builder carrying [[staticConf]]; mains that choose
+    * their own runtime confs start from it. */
+  def builder(cores: String): SparkSession.Builder = {
+    val b = SparkSession.builder().master(s"local[$cores]")
+    staticConf.foreach { case (k, v) => b.config(k, v) }
+    b
+  }
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val b = SparkSession
-      .builder()
-      .master(s"local[$cores]")
+    val b = builder(cores.toString)
       .appName("graft")
-      .config("spark.ui.enabled", "false")
-      // native expressions as SQL functions (minhash_sig, simhash_sig,
-      // array_dot, marker_counts)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
       .config("spark.sql.shuffle.partitions", cores.toString)
     tuning.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
@@ -113,8 +128,8 @@ object GraftSession {
     spark
   }
 
-  /** Apply engine tuning to an externally-created session (Verify/Bench
-    * own their builder; runtime-settable confs only). */
+  /** Apply engine tuning to a session built from [[builder]] (runtime-
+    * settable confs only). */
   def tune(spark: SparkSession): SparkSession = {
     tuning.foreach { case (k, v) =>
       try spark.conf.set(k, v)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Ranks
@@ -15,15 +15,8 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.codegenCacheEntries)
-      .config("spark.ui.enabled", "false")
-      // static conf: the injected rules/functions (ZoneMapSkipping,
-      // ManifestAggregates, SQL surface) must be live in every main
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ranks
@@ -28,10 +28,8 @@ object ProfileCumSum {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(20_000_000L)
     val groups = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val spark = GraftSession.builder("32")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -26,10 +26,8 @@ object ProfileTopK {
     val pairs = args.headOption.map(_.toLong).getOrElse(40_000_000L)
     val queries = if (args.length > 1) args(1).toInt else 128
     val k = 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val spark = GraftSession.builder("32")
       .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     GraftSession.tune(spark)
     // the engine scopes this raise to ANN frames via GraftSession

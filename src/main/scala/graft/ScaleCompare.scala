@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,13 +39,8 @@ object ScaleCompare {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "fixtures/sf0.1x10")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf: the injected rules/functions (ZoneMapSkipping,
-      // ManifestAggregates, SQL surface) must be live in every main
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,12 +9,7 @@ object Verify {
     // runs the full dump and emits it as a side artifact too.
     if (args.headOption.contains("quality")) {
       val Array(_, sfDir, outFile) = args
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.codegen.cache.maxEntries",
-          GraftSession.codegenCacheEntries)
+      val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
         .getOrCreate()
       GraftSession.tune(spark) // nanosAsLong for the events scan, etc.
       spark.sparkContext.setLogLevel("WARN")
@@ -28,16 +22,9 @@ object Verify {
     }
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(cpus)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf: the injected rules/functions (ZoneMapSkipping,
-      // ManifestAggregates, SQL surface) must be live in every main
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.codegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
