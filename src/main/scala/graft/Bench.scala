@@ -311,7 +311,7 @@ object Bench {
         // never triggers — at 100× the lingering blocks, q24's ~2 GB
         // GraphX graphs the largest, pinned the storage region until
         // a later execution peak OOM'd an 8 GiB heap at q30; the
-        // round-14 diagnosis, ProfileHeap has the per-query numbers).
+        // round-14 diagnosis, `Dev heap` gives the per-query numbers).
         // Between queries no cross-query RDD cache is legitimate, so
         // a blanket unpersist is safe and keeps the heap envelope
         // flat no matter how many passes run.

@@ -93,11 +93,10 @@ object GraftSession {
     * Production rationale is the same at any scale — an engine serving
     * a repeated query mix should size the cache to its fragment
     * working set; entries are compiled classes, a few KB each. */
-  val codegenCacheEntries: String =
-    sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
+  val codegenCacheEntries: String = "8192"
 
   /** Builder-time (STATIC) confs of every session the engine builds,
-    * defined once so that `Bench`, `Verify` and the workbench mains run
+    * defined once so that `Bench`, `Verify` and `Dev` run
     * the engine the specs and the lakehouse run:
     *   - the native expressions as SQL functions (minhash_sig,
     *     simhash_sig, array_dot, marker_counts) and the planner rules,

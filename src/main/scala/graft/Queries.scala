@@ -320,7 +320,7 @@ object Queries {
     * verdict asked to adjudicate): one-bit multiprobe lifts the
     * candidate guarantee from hamming ≤ 3 to ≤ 7, capturing the
     * J ≥ 0.7 truth pairs whose 4–5 differing bits spread across all
-    * four quarters. Measured (ProfileSimhashProbe): recall
+    * four quarters. Measured (SCALING.md, round 17): recall
     * 0.88 → 1.00 at sf0.01 and 0.883 → 0.977 at sf0.1, candidates
     * 4.8–4.9× (not the 17× band-frame worst case — `distinct`
     * collapses multi-band hits), wall 1.26 → 2.00 s at sf0.1. The
@@ -1393,7 +1393,7 @@ object Queries {
 
   /** q56 — skew-safe large×large equi join under a value oracle: the
     * CORRECTNESS-covered entry for `Enrichment.saltedJoin` (previously
-    * spec/SkewDemo-only). lineitem ⋈ orders on orderkey with a
+    * spec/`Dev skew`-only). lineitem ⋈ orders on orderkey with a
     * deliberately tiny hot threshold (>3 lines per order, about half
     * the keys at any SF) so BOTH paths — salted scatter for hot keys,
     * 1:1 for cold — carry real rows; `saltBy = l_linenumber` keeps the

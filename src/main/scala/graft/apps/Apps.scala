@@ -51,19 +51,42 @@ object OdsDbIngest {
     val routed = Pipelines.odsRouteCdc(cdc, config, sourceDb = "lakehousedb",
       factTableFor = when(col("table") === "mc_user_login", lit("ODS_USER_LOGIN")),
       factTopicFor = when(col("table") === "mc_user_login", lit("KAFKA-DWD-USER-LOGIN-TOPIC")))
+    val isFact = col("route") === "fact" && col("iceberg_ods_tbl_name").isNotNull
+    val isDim = col("route") === "dim"
+    val (factDir, dimDir) = (Layout.ods(work, "USER_LOGIN"), s"$work/topics/dim_envelope")
+    // An empty slice writes no file: each file starts a downstream
+    // micro-batch. Its directory is still made, for a file stream to
+    // start on. One shuffle-free job over the persisted batch tells which
+    // slices hold rows; the fact writer runs first (dualSink's order) and
+    // leaves the dim answer for the dim writer.
+    var anyDim = false
+    def mkdir(dir: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
+    }
     Sinks.dualSink(routed, Layout.cp(work, "ods_db"),
-      b => fmt.append(
-        b.filter(col("route") === "fact" && col("iceberg_ods_tbl_name").isNotNull)
-          .select(Cleanse.payload(col("data"), "id").as("id"),
-            Cleanse.payload(col("data"), "user_id").as("user_id"),
-            Cleanse.payload(col("data"), "ip").as("ip"),
-            Cleanse.payload(col("data"), "login_tm").as("login_tm"),
-            Cleanse.payload(col("data"), "logout_tm").as("logout_tm")),
-        Layout.ods(work, "USER_LOGIN")),
-      b => b.filter(col("route") === "dim")
-        .select(col("phoenix_tbl_name"), col("pk_col"), col("cols"),
-          col("type").as("tp"), to_json(col("data")).as("data"))
-        .write.mode("append").parquet(s"$work/topics/dim_envelope"),
+      b => {
+        val (anyFact, dim) = b.select(coalesce(isFact, lit(false)), coalesce(isDim, lit(false)))
+          .rdd.aggregate((false, false))(
+            (a, r) => (a._1 || r.getBoolean(0), a._2 || r.getBoolean(1)),
+            (x, y) => (x._1 || y._1, x._2 || y._2))
+        anyDim = dim
+        if (!anyFact) mkdir(factDir)
+        else fmt.append(
+          b.filter(isFact)
+            .select(Cleanse.payload(col("data"), "id").as("id"),
+              Cleanse.payload(col("data"), "user_id").as("user_id"),
+              Cleanse.payload(col("data"), "ip").as("ip"),
+              Cleanse.payload(col("data"), "login_tm").as("login_tm"),
+              Cleanse.payload(col("data"), "logout_tm").as("logout_tm")),
+          factDir)
+      },
+      b =>
+        if (!anyDim) mkdir(dimDir)
+        else b.filter(isDim)
+          .select(col("phoenix_tbl_name"), col("pk_col"), col("cols"),
+            col("type").as("tp"), to_json(col("data")).as("data"))
+          .write.mode("append").parquet(dimDir),
       triggerMs = 200L)
   }
 }

@@ -147,10 +147,6 @@ object Evolution {
     }
   }
 
-  /** Ordered rename journal of `path` (back-compat view of [[journal]]). */
-  def renames(spark: SparkSession, path: String): Seq[Rename] =
-    journal(spark, path).collect { case r: Rename => r }
-
   private def serialize(op: Op): String = op match {
     case Rename(f, t) => s"rename\t$f\t$t"
     case Drop(c)      => s"drop\t$c"
@@ -275,10 +271,6 @@ object Evolution {
           if (names.contains(c)) d.withColumn(c, col(c).cast(t)) else d
       }
     }
-
-  /** Back-compat alias of [[applyOps]] over renames only. */
-  def applyRenames(df: DataFrame, renames: Seq[Rename]): DataFrame =
-    applyOps(df, renames)
 
   /** Conform `df` to `target`: add target columns `df` lacks as typed
     * nulls (a generation written before an add-column evolution), drop

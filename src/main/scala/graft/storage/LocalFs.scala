@@ -6,8 +6,8 @@ import java.nio.file.{Files, InvalidPathException, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver,
-  FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path,
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FSLinkResolver, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path,
   RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
@@ -22,7 +22,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * plus parquet parts per layer. These classes do the same two
   * operations through `java.nio`, in process; everything else —
   * `.crc` sidecars, checksum verification, rename and permission
-  * semantics — is Hadoop's own code, unchanged.
+  * semantics — is Hadoop's own code, unchanged, except that the
+  * one-arg `FileContext.open` verifies checksums too.
   *
   * [[GraftSession.staticConf]] registers them for both filesystem APIs
   * (`FileSystem` and the `FileContext` Spark's checkpoint manager uses);
@@ -96,7 +97,15 @@ class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSy
   * `ChecksumFs` over the fork-free raw filesystem, as `local.LocalFs`
   * wraps `local.RawLocalFs` (which, like it, ignores the given URI). */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForkFreeRawLocalFs(conf))
+    extends ChecksumFs(new ForkFreeRawLocalFs(conf)) {
+
+  /** `ChecksumFs` verifies only in `open(path, bufferSize)`; the one-arg
+    * form it inherits from `FilterFs` reads the raw file, and that is the
+    * form Spark's checkpoint manager reads its offset and commit logs
+    * with. */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 /** `local.RawLocalFs` with the fork-free filesystem as its delegate. */
 private[storage] class ForkFreeRawLocalFs(conf: Configuration)

@@ -85,6 +85,42 @@ class AppsSpec extends SparkTestBase {
       .as[(String, String, String)].head() == ("9997", "uid756103", "4"))
   }
 
+  test("CDC path: a batch without facts or without dims writes no file for that slice") {
+    val w = work()
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[(String, String, String, String, Map[String, String])]
+    val cdc = in.toDF().toDF("database", "table", "type", "ts", "data")
+    val config = Seq(("lakehousedb", "mc_member_info", "DIM_MEMBER_INFO", "id", "user_id"))
+      .toDF("tbl_db", "tbl_name", "phoenix_tbl_name", "pk_col", "cols")
+    val (facts, dims) = (Layout.ods(w, "USER_LOGIN"), s"$w/topics/dim_envelope")
+    def files(dir: String): Set[String] = {
+      val base = java.nio.file.Paths.get(dir)
+      import scala.jdk.CollectionConverters._
+      Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(base.relativize(_).toString).toSet
+    }
+    val q = OdsDbIngest.run(spark, cdc, config, w)
+    try {
+      in.addData(("lakehousedb", "mc_user_login", "insert", "1",
+        Map("id" -> "1", "user_id" -> "u1", "ip" -> "1.2.3.4")))
+      q.processAllAvailable()
+      // the dim slice was empty: its directory exists for a file stream
+      // to start on, but holds no file that would start an empty batch
+      assert(Files.isDirectory(java.nio.file.Paths.get(dims)))
+      assert(files(dims).isEmpty, files(dims))
+      val factFiles = files(facts)
+      assert(factFiles.exists(_.endsWith(".parquet")))
+
+      in.addData(("lakehousedb", "mc_member_info", "insert", "2",
+        Map("id" -> "7", "user_id" -> "u7")))
+      q.processAllAvailable()
+      assert(files(facts) == factFiles)
+      assert(files(dims).exists(_.endsWith(".parquet")))
+    } finally q.stop()
+    assert(spark.read.parquet(facts).count() == 1)
+    assert(spark.read.parquet(dims).count() == 1)
+  }
+
   test("dim upsert: cols CSV creates a never-seen table; bad identifiers sanitized") {
     val w = work()
     implicit val sc = spark.sqlContext

@@ -105,11 +105,16 @@ class LocalFsSpec extends SparkTestBase {
       intercept[ChecksumException] {
         val in = fs.open(new Path(s"$dir/viaFs")); try in.readFully(buf) finally in.close()
       }
-      // `ChecksumFs` verifies in `open(path, bufferSize)`; its one-arg
-      // `open` is `FilterFs`'s, which reads the raw file on either side
       intercept[ChecksumException] {
         val in = fc.open(new Path(s"$dir/viaFc"), 4096); try in.readFully(buf) finally in.close()
       }
+    }
+    // Spark's checkpoint manager reads its logs through the one-arg
+    // `FileContext.open`; stock `ChecksumFs` inherits `FilterFs`'s, which
+    // reads the raw file, so only the fork-free side is held to it
+    intercept[ChecksumException] {
+      val buf = new Array[Byte](payload.length)
+      val in = fFc.open(new Path(s"$b/viaFc")); try in.readFully(buf) finally in.close()
     }
     Seq(sFs, fFs).foreach(_.close())
   }
